@@ -131,8 +131,7 @@ object BenchOne {
           case "worldscale_read" =>
             // steady-state half of the same job: bucketed tables pre-built
             // (wsTables, untimed), reps pay only extraction-free read + SMJ
-            Pipeline.geocodeWorldScaleRead(spark, wsTables._1, wsTables._2,
-              idx, polys, cells).count()
+            Pipeline.geocodeWorldScaleRead(spark, wsTables._1, wsTables._2, idx).count()
           case _ =>
             Pipeline.geocodePrepared(spark, pagesDf, prep, scanner).count()
         }

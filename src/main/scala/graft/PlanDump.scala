@@ -5,12 +5,12 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.xxhash64
 
-import graft.engine.{Gazetteer, Pipeline, Reverse}
+import graft.engine.{Gazetteer, Pipeline}
 import graft.fixtures.Synth
 
-/** Writes PLANS.md: `explain(formatted)` of the flagship pipeline and the
-  * reverse shuffle fallback — committed so plan-shape regressions are
-  * reviewable in diffs. */
+/** Writes PLANS.md: `explain(formatted)` of the flagship pipeline and its
+  * world-scale variant, among other plans — committed so plan-shape
+  * regressions are reviewable in diffs. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[4]")
@@ -28,9 +28,6 @@ object PlanDump {
     val pipeline = Pipeline.geocode(spark, pages, idx, polys, cells,
       Gazetteer.scanner())
     val tiles = Pipeline.tiles(pipeline)
-    val revShuffle = Reverse.reverse(
-      Seq((1L, 2.1287, 41.40139)).toDF("query_id", "lon", "lat"),
-      polys, cells, broadcastIndex = false)
 
     def fmt(df: org.apache.spark.sql.DataFrame): String =
       df.queryExecution.explainString(
@@ -46,8 +43,6 @@ object PlanDump {
     md.append(fmt(pipeline)).append("\n```\n\n")
     md.append("## Per-tile rollup (the job's only exchange)\n\n```\n")
     md.append(fmt(tiles)).append("\n```\n\n")
-    md.append("## Reverse shuffle-join fallback (world-scale polygons)\n\n```\n")
-    md.append(fmt(revShuffle)).append("\n```\n\n")
 
     // world-scale flagship: bucketed tables -> zero-exchange SMJ reverse join
     val wh = Files.createTempDirectory("graft-plandump").toString

@@ -35,7 +35,7 @@ import graft.geo.CellIndex
  * BROADCAST hash join and the points side is map-only — explode, probe,
  * filter, zero exchanges. Past the broadcast wall, bucket BOTH sides by the
  * cover-level cell id (the exploded points side on cand_cell, places on
- * cell) exactly as Reverse.reverseBucketed does for PIP, and the join runs
+ * cell) exactly as Pipeline.geocodeWorldScale does for PIP, and the join runs
  * as a zero-exchange sort-merge join; radius skew (dense urban cells) is the
  * same salted two-path story as engine/Salt.
  */

@@ -70,9 +70,7 @@ object Pipeline {
     }
 
     maybeStage(spark, cfg, "hits", fp) {
-      val prep = prepare(nameIndex, polygons, polyCells, cfg, cache = false)
-      fuseHits(withCoordCell(mentions), prep.top1,
-        df => df.join(broadcast(prep.packed), Seq("cell"), "left"), cfg)
+      hitsPrepared(mentions, prepare(nameIndex, polygons, polyCells, cfg, cache = false), cfg)
     }
   }
 
@@ -85,32 +83,40 @@ object Pipeline {
 
   def prepare(nameIndex: DataFrame, polygons: DataFrame, polyCells: DataFrame,
               cfg: Config = Config(), cache: Boolean = true): Prepared = {
-    val top1 = Forward.top1Index(nameIndex, cfg.fwdParams)
+    val top1 = top1Index(nameIndex, cfg)
+    val packed = Reverse.packedCellIndex(polygons, polyCells)
+    if (cache) Prepared(top1.cache(), packed.cache())
+    else Prepared(top1, packed)
+  }
+
+  /** The forward broadcast side: top-1 place per name key, `g_`-prefixed. */
+  private def top1Index(nameIndex: DataFrame, cfg: Config): DataFrame =
+    Forward.top1Index(nameIndex, cfg.fwdParams)
       .select(col("gaz_key"), col("place_id").as("g_place_id"),
         col("name").as("g_name"), col("lon").as("g_lon"), col("lat").as("g_lat"),
         col("country_code").as("g_cc"), col("city").as("g_city"),
         col("road").as("g_road"), col("house_number").as("g_house"),
         col("postcode").as("g_postcode"))
-    val packed = Reverse.packedCellIndex(polygons, polyCells)
-    if (cache) Prepared(top1.cache(), packed.cache())
-    else Prepared(top1, packed)
-  }
 
   /** Steady-state batch geocode over PRE-BUILT indexes (see prepare): the
     * shape of a production crawl loop, where the broadcast sides are built
     * once and every pages batch pays only its own map work. */
   def geocodePrepared(spark: SparkSession, pages: DataFrame, prep: Prepared,
                       scanner: DictScanner, cfg: Config = Config()): DataFrame =
-    fuseHits(withCoordCell(Extract.mentions(spark, pages, scanner)), prep.top1,
+    hitsPrepared(Extract.mentions(spark, pages, scanner), prep, cfg)
+
+  /** Mentions -> hits over the prepared indexes, both probed by broadcast. */
+  private def hitsPrepared(mentions: DataFrame, prep: Prepared, cfg: Config): DataFrame =
+    fuseHits(withCoordCell(mentions), prep.top1,
       df => df.join(broadcast(prep.packed), Seq("cell"), "left"), cfg)
 
   /**
    * World-polygon-scale variant (the flagship shape when admin polygons
    * outgrow the broadcast budget): the packed cell index lives as a
-   * cell-BUCKETED table (written once via Reverse.writePackedBucketed —
-   * amortized over every batch), and the extraction output is written
-   * bucketed by the same key at its stage boundary, so the reverse join is a
-   * ZERO-EXCHANGE sort-merge join. The forward side stays a broadcast hash
+   * cell-BUCKETED table (written once by worldScaleLayout — amortized over
+   * every batch), and the extraction output is written bucketed by the same
+   * key at its stage boundary, so the reverse join is a ZERO-EXCHANGE
+   * sort-merge join. The forward side stays a broadcast hash
    * join (the top-1 name index is always small). The only price vs the
    * broadcast path is the bucketed write of the mentions — which a
    * checkpointing pipeline pays anyway (E10 stages materialize).
@@ -122,8 +128,7 @@ object Pipeline {
                         reusePacked: Boolean = true): DataFrame = {
     val (mentionsTable, packedTable) = worldScaleLayout(spark, pages, polygons,
       polyCells, scanner, warehouseDir, buckets, cfg, reusePacked)
-    geocodeWorldScaleRead(spark, mentionsTable, packedTable, nameIndex,
-      polygons, polyCells, cfg)
+    geocodeWorldScaleRead(spark, mentionsTable, packedTable, nameIndex, cfg)
   }
 
   /** The write half of the world-scale path: materialize the cell-bucketed
@@ -156,19 +161,21 @@ object Pipeline {
     val reusable = reusePacked &&
       Checkpoint.exists(spark, packedPath) &&
       Checkpoint.pathFingerprint(spark, packedPath).contains(packedFp)
+    val packed = Reverse.packedCellIndex(polygons, polyCells)
     if (reusable && !spark.catalog.tableExists(packedTable)) {
       // the files exist (e.g. written by a previous job/session) but this
       // session's catalog doesn't know them: re-register the EXTERNAL table
       // with its bucket spec instead of rewriting — the packed world index
       // is built once and amortizes over every batch job that reads it
-      val ddl = Reverse.packedCellIndex(polygons, polyCells).schema.toDDL
-      spark.sql(s"CREATE TABLE $packedTable ($ddl) USING PARQUET " +
+      spark.sql(s"CREATE TABLE $packedTable (${packed.schema.toDDL}) USING PARQUET " +
         s"CLUSTERED BY (cell) SORTED BY (cell) INTO $buckets BUCKETS " +
         s"LOCATION '$packedPath'")
     }
     if (!reusable) {
-      Reverse.writePackedBucketed(spark, polygons, polyCells,
-        packedTable, packedPath, buckets)
+      // one shuffle at build time; zero at query time
+      spark.sql(s"DROP TABLE IF EXISTS $packedTable")
+      packed.write.bucketBy(buckets, "cell").sortBy("cell")
+        .option("path", packedPath).mode("overwrite").saveAsTable(packedTable)
       Checkpoint.writePathFingerprint(spark, packedPath, packedFp)
     }
     val mentions = withCoordCell(Extract.mentions(spark, pages, scanner))
@@ -184,14 +191,10 @@ object Pipeline {
     * crawl pays per batch once the layout exists. */
   def geocodeWorldScaleRead(spark: SparkSession, mentionsTable: String,
                             packedTable: String, nameIndex: DataFrame,
-                            polygons: DataFrame, polyCells: DataFrame,
-                            cfg: Config = Config()): DataFrame = {
-    val prep = prepare(nameIndex, polygons, polyCells, cfg, cache = false)
-    fuseHits(spark.table(mentionsTable), prep.top1,
-      df => df.hint("merge")
-        .join(spark.table(packedTable), Seq("cell"), "left"),
+                            cfg: Config = Config()): DataFrame =
+    fuseHits(spark.table(mentionsTable), top1Index(nameIndex, cfg),
+      df => df.hint("merge").join(spark.table(packedTable), Seq("cell"), "left"),
       cfg)
-  }
 
   /** Cheap order-insensitive content digest: row count + bit_xor of
     * per-row xxhash64 over the given (hashable) columns. */
@@ -212,45 +215,36 @@ object Pipeline {
     * packed-index join strategy. */
   private def fuseHits(mentions: DataFrame, top1: DataFrame,
                        revJoin: DataFrame => DataFrame, cfg: Config): DataFrame = {
-      val lang = cfg.revParams.language.map(_.toLowerCase(java.util.Locale.ROOT))
-      val fwdCountry = Format.countryNameCol(col("g_cc"), lang)
+    val lang = cfg.revParams.language.map(_.toLowerCase(java.util.Locale.ROOT))
+    val fwdCountry = Format.countryNameCol(col("g_cc"), lang)
 
-      val joined = revJoin(
-          mentions.join(broadcast(top1), mentions("norm") === top1("gaz_key"), "left"))
-        .withColumn("__rev", Reverse.bestPolygon(col("cands"), col("lon"), col("lat")))
-        .drop("cands")
+    val joined = Reverse.probe(revJoin(
+      mentions.join(broadcast(top1), mentions("norm") === top1("gaz_key"), "left")))
 
-      def rv(f: String) = col("__rev").getField(f)
-      val revCity = lang.map(l => coalesce(element_at(rv("loc_city"), l), rv("fmt_city")))
-        .getOrElse(rv("fmt_city"))
-      val revCountry = lang.map(l => coalesce(element_at(rv("loc_country"), l), rv("fmt_country")))
-        .getOrElse(rv("fmt_country"))
+    def rv(f: String) = col(Reverse.Best).getField(f)
+    val rev = Reverse.address(rv, cfg.revParams.language)
 
-      val hits = joined
-        .withColumn("verb",
-          when(col("kind") === "name" && col("g_place_id").isNotNull, "forward")
-            .when(col("kind") === "coord" && rv("polygon_id").isNotNull, "reverse"))
-        .filter(col("verb").isNotNull)
-        .withColumn("name", when(col("verb") === "forward", col("g_name"))
-          .otherwise(rv("name")))
-        .withColumn("ref_id", when(col("verb") === "forward", col("g_place_id"))
-          .otherwise(rv("polygon_id")))
-        .withColumn("lon", when(col("verb") === "forward", col("g_lon"))
-          .otherwise(col("lon")))
-        .withColumn("lat", when(col("verb") === "forward", col("g_lat"))
-          .otherwise(col("lat")))
-        .withColumn("formatted", when(col("verb") === "forward",
-          Format.opencageFormatted(col("g_name"), col("g_house"), col("g_road"),
-            col("g_postcode"), col("g_city"), fwdCountry))
-          .otherwise(
-            when(rv("fmt_road").isNotNull, concat_ws(", ",
-              rv("fmt_road"), rv("fmt_house"),
-              concat_ws(" ", rv("fmt_postcode"), revCity), revCountry))
-              .otherwise(concat_ws(", ", rv("name"), revCity, revCountry))))
-        .select("url", "warc_ts", "lang", "text_sha256", "surface", "verb",
-          "name", "ref_id", "lon", "lat", "formatted")
+    val hits = joined
+      .withColumn("verb",
+        when(col("kind") === "name" && col("g_place_id").isNotNull, "forward")
+          .when(col("kind") === "coord" && rv("polygon_id").isNotNull, "reverse"))
+      .filter(col("verb").isNotNull)
+      .withColumn("name", when(col("verb") === "forward", col("g_name"))
+        .otherwise(rv("name")))
+      .withColumn("ref_id", when(col("verb") === "forward", col("g_place_id"))
+        .otherwise(rv("polygon_id")))
+      .withColumn("lon", when(col("verb") === "forward", col("g_lon"))
+        .otherwise(col("lon")))
+      .withColumn("lat", when(col("verb") === "forward", col("g_lat"))
+        .otherwise(col("lat")))
+      .withColumn("formatted", when(col("verb") === "forward",
+        Format.opencageFormatted(col("g_name"), col("g_house"), col("g_road"),
+          col("g_postcode"), col("g_city"), fwdCountry))
+        .otherwise(rev.formatted))
+      .select("url", "warc_ts", "lang", "text_sha256", "surface", "verb",
+        "name", "ref_id", "lon", "lat", "formatted")
 
-      Tiler.assign(hits, cfg.tileZ)
+    Tiler.assign(hits, cfg.tileZ)
   }
 
   /** Per-tile rollup of the geocoded hits (E7 aggregation). */

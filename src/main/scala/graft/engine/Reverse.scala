@@ -1,7 +1,6 @@
 package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GeoFunctions._
@@ -15,10 +14,12 @@ import graft.model.ReverseParams
  * non-equi spatial predicate therefore never sees a cross product — only
  * same-cell candidates.
  *
- * Scale shape: points (big) stay unshuffled when the cell index broadcasts
- * (default); at world polygon scale pass broadcastIndex=false to shuffle both
- * sides on `cell` instead — the join key is already salted by geography
- * (cells), and AQE skew-join splits dense urban cells further (E9).
+ * Scale shape: points (big) stay unshuffled because the packed cell index
+ * broadcasts. When admin polygons outgrow the broadcast budget, the
+ * flagship's world-scale variant (Pipeline.geocodeWorldScale) reads the same
+ * packed index from a cell-bucketed table through a zero-exchange sort-merge
+ * join. Every layout runs the same `probe` and `address`; only the join that
+ * reaches the packed index differs.
  *
  * Reference semantics preserved:
  *  - single result per point, most-specific polygon
@@ -64,53 +65,68 @@ object Reverse {
     get(sorted, lit(0))
   }
 
+  /** Name of the struct column `probe` adds: the best candidate polygon. */
+  val Best = "__best"
+
+  /** THE reverse probe, shared by every index layout: over a frame already
+    * joined to the packed index (`cands`, `lon`, `lat`), ray-cast + pick the
+    * most specific polygon into struct column [[Best]] (null when no
+    * candidate contains the point) and drop `cands`. Callers differ only in
+    * the join that reaches the packed index: a broadcast for the flat index
+    * (`reverse`, Pipeline, streaming), one broadcast per level for the
+    * compact index, a bucketed SMJ for the world-scale tables. */
+  def probe(joined: DataFrame): DataFrame =
+    joined.withColumn(Best, bestPolygon(col("cands"), col("lon"), col("lat")))
+      .drop("cands")
+
+  /** Localised city and country of one polygon, and its reverse `formatted`
+    * string. */
+  case class Address(city: Column, country: Column, formatted: Column)
+
+  /** THE reverse address formatter: "road, house, postcode city, country"
+    * when the polygon carries a road, else "name, city, country". `field`
+    * reads a packed candidate field (a flat column or a struct field);
+    * `language` picks the `loc_city`/`loc_country` translation, falling back
+    * to the default name. */
+  def address(field: String => Column, language: Option[String]): Address = {
+    val lang = language.map(_.toLowerCase(java.util.Locale.ROOT))
+    def localised(f: String) =
+      lang.map(l => coalesce(element_at(field(s"loc_$f"), l), field(s"fmt_$f")))
+        .getOrElse(field(s"fmt_$f"))
+    val city = localised("city")
+    val country = localised("country")
+    Address(city, country,
+      when(field("fmt_road").isNotNull, concat_ws(", ",
+        field("fmt_road"), field("fmt_house"),
+        concat_ws(" ", field("fmt_postcode"), city), country))
+        .otherwise(concat_ws(", ", field("name"), city, country)))
+  }
+
   /**
    * R1-R4 — PIP reverse. `points`: (query_id, lon, lat, ...).
    * Output: one row per input point, formatted + components,
    * geocode_status in {ok, no_result}.
    *
-   * Default (broadcastIndex=true) is MAP-ONLY: broadcast hash join on the
-   * level-13 cell against the packed cell index, then ray-cast + best-pick
-   * as array expressions. The points side never shuffles and never
-   * aggregates — reverse geocoding 10^12 points is a single map stage.
-   * broadcastIndex=false is the world-polygon fallback: shuffle join on
-   * `cell` (geography-salted key) + groupBy/max_by selection.
+   * MAP-ONLY: broadcast hash join on the level-13 cell against the packed
+   * cell index, then ray-cast + best-pick as array expressions. The points
+   * side never shuffles and never aggregates — reverse geocoding 10^12
+   * points is a single map stage. Polygon sets past the broadcast budget
+   * go through Pipeline.geocodeWorldScale (cell-bucketed SMJ) instead.
    */
   def reverse(points: DataFrame, polygons: DataFrame, cellIndex: DataFrame,
               params: ReverseParams = ReverseParams(),
-              broadcastIndex: Boolean = true,
               tzByCell: Map[Long, String] = Map.empty): DataFrame = {
     val pts = points.withColumn("cell", cellId(col("lon"), col("lat"),
       lit(graft.geo.CellIndex.FineLevel)))
-
-    val best =
-      if (broadcastIndex) {
-        val packed = packedCellIndex(polygons, cellIndex)
-        bestFromPacked(pts.join(broadcast(packed), Seq("cell"), "left"))
-      } else {
-        val cand = pts.join(cellIndex, Seq("cell"), "inner")
-          .join(broadcast(polygons), Seq("polygon_id"), "inner")
-          .filter(rayCast(col("lon"), col("lat"),
-            col("ring_offsets"), col("ring_lons"), col("ring_lats")))
-        val payload = (Seq("lon", "lat") ++ packedFields).distinct
-        val agg = cand.groupBy(col("query_id"))
-          .agg(max_by(struct(payload.map(col): _*),
-            struct(col("admin_level"), -col("polygon_id"))).as("__best"))
-          .select(col("query_id") +: payload.map(c => col(s"__best.$c").as(c)): _*)
-        // restore non-matching points (left semantics) and any extra columns
-        points.join(agg.drop("lon", "lat"), Seq("query_id"), "left")
-      }
-    finish(best, points, params, tzByCell)
+    val packed = packedCellIndex(polygons, cellIndex)
+    finish(flatten(probe(pts.join(broadcast(packed), Seq("cell"), "left"))),
+      points, params, tzByCell)
   }
 
-  /** Ray-cast + best-pick over a (points LEFT JOIN packed-index) frame —
-    * shared by the broadcast path and the bucketed-SMJ world-scale path. */
-  private def bestFromPacked(joined: DataFrame): DataFrame =
-    joined
-      .withColumn("__best", bestPolygon(col("cands"), col("lon"), col("lat")))
-      .drop("cands")
-      .select(col("*") +: packedFields.map(c => col(s"__best.$c").as(c)): _*)
-      .drop("__best")
+  /** Unpack the [[Best]] struct into one column per packed field. */
+  private def flatten(probed: DataFrame): DataFrame =
+    probed.select(col("*") +: packedFields.map(c => col(s"$Best.$c").as(c)): _*)
+      .drop(Best)
 
   /**
    * PIP reverse against a COMPACT (mixed-level) covering index — the layout
@@ -148,49 +164,14 @@ object Reverse {
       coalesce(col(s"__cands_$lv"), array().cast(candsType))): _*)
     val joined = cur.withColumn("cands", merged)
       .drop(levels.map(lv => s"__cands_$lv"): _*)
-    finish(bestFromPacked(joined), points, params, tzByCell)
-  }
-
-  /**
-   * World-polygon-scale reverse: both sides are cell-bucketed tables, so the
-   * join is a ZERO-EXCHANGE sort-merge join — the bucketed layout IS the
-   * shuffle, paid once at write time (and the packed-index write amortizes
-   * over every batch that reads it). Selection stays an array expression;
-   * nothing aggregates after the join.
-   *
-   * `pointsTable` must contain a `cell` column (level-13) and be bucketed by
-   * it; `packedTable` is the packedCellIndex written with the same bucket
-   * count (see writePackedBucketed).
-   */
-  def reverseBucketed(spark: org.apache.spark.sql.SparkSession,
-                      pointsTable: String, packedTable: String,
-                      params: ReverseParams = ReverseParams(),
-                      tzByCell: Map[Long, String] = Map.empty): DataFrame = {
-    val pts = spark.table(pointsTable)
-    val joined = pts.hint("merge")
-      .join(spark.table(packedTable), Seq("cell"), "left")
-    finish(bestFromPacked(joined), pts, params, tzByCell)
-  }
-
-  /** Materialize the packed cell->candidates index as a cell-bucketed table
-    * (the world-scale layout). One shuffle at build time; zero at query time. */
-  def writePackedBucketed(spark: org.apache.spark.sql.SparkSession,
-                          polygons: DataFrame, cellIndex: DataFrame,
-                          table: String, path: String, buckets: Int): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    packedCellIndex(polygons, cellIndex).write
-      .bucketBy(buckets, "cell").sortBy("cell")
-      .option("path", path).mode("overwrite").saveAsTable(table)
+    finish(flatten(probe(joined)), points, params, tzByCell)
   }
 
   private def finish(best: DataFrame, points: DataFrame,
                      params: ReverseParams,
                      tzByCell: Map[Long, String] = Map.empty): DataFrame = {
-    val lang = params.language.map(_.toLowerCase(java.util.Locale.ROOT))
-    val city = lang.map(l => coalesce(element_at(col("loc_city"), l), col("fmt_city")))
-      .getOrElse(col("fmt_city"))
-    val country = lang.map(l => coalesce(element_at(col("loc_country"), l), col("fmt_country")))
-      .getOrElse(col("fmt_country"))
+    val addr = address(c => col(c), params.language)
+    val (city, country) = (addr.city, addr.country)
 
     var res = best
       .withColumn("display_name", when(col("polygon_id").isNotNull,
@@ -198,11 +179,7 @@ object Reverse {
           col("fmt_house"), lit(null).cast("string"), col("fmt_suburb"), city,
           col("fmt_county"), col("fmt_state"), col("fmt_region"),
           col("fmt_postcode"), country)))
-      .withColumn("formatted", when(col("polygon_id").isNotNull,
-        when(col("fmt_road").isNotNull, concat_ws(", ",
-          col("fmt_road"), col("fmt_house"),
-          concat_ws(" ", col("fmt_postcode"), city), country))
-          .otherwise(concat_ws(", ", col("name"), city, country))))
+      .withColumn("formatted", when(col("polygon_id").isNotNull, addr.formatted))
       // OpenCage `components` (opencage.rs:571; fr test indexes
       // components("road"), opencage.rs:800) — built before fmt_* are dropped
       .withColumn("components", when(col("polygon_id").isNotNull, map_filter(map(

@@ -172,12 +172,12 @@ object Similarity {
   }
 
   /** World-scale IVF layout: the posting lists PERSISTED as a list-bucketed
-    * table (mirror of Reverse.writePackedBucketed) — the corpus is assigned
-    * once (map-only nearest-centroid) and written bucketed+sorted by `list`,
-    * so every subsequent query batch reads ONLY its probed lists (bucket
-    * pruning on the scan) and pays ZERO exchange on the corpus side. The
-    * write amortizes over every batch, exactly like the packed polygon
-    * index. */
+    * table (mirror of the packed polygon table of Pipeline.geocodeWorldScale)
+    * — the corpus is assigned once (map-only nearest-centroid) and written
+    * bucketed+sorted by `list`, so every subsequent query batch reads ONLY
+    * its probed lists (bucket pruning on the scan) and pays ZERO exchange on
+    * the corpus side. The write amortizes over every batch, exactly like the
+    * packed polygon index. */
   def writeIvfBucketed(spark: org.apache.spark.sql.SparkSession, corpus: DataFrame,
                        centroids: Array[Float], table: String, path: String,
                        buckets: Int = 8,

@@ -78,13 +78,10 @@ object StreamGeocode {
       .withColumn("cell", GeoFunctions.cellId(col("lon"), col("lat"),
         lit(graft.geo.CellIndex.FineLevel)))
     val packed = Reverse.packedCellIndex(polygons, polyCells)
-    coords.join(broadcast(packed), Seq("cell"), "left")
-      .withColumn("__best", Reverse.bestPolygon(col("cands"), col("lon"), col("lat")))
-      .drop("cands")
+    def best(f: String) = col(Reverse.Best).getField(f).as(f)
+    Reverse.probe(coords.join(broadcast(packed), Seq("cell"), "left"))
       .select(col("url"), col("warc_ts"), col("surface"), col("lon"), col("lat"),
-        col("__best.polygon_id").as("polygon_id"),
-        col("__best.name").as("name"),
-        col("__best.admin_level").as("admin_level"))
+        best("polygon_id"), best("name"), best("admin_level"))
       .withColumn("geocode_status",
         when(col("polygon_id").isNotNull, "ok").otherwise("no_result"))
   }

@@ -104,9 +104,12 @@ class BboxJoinSpec extends AnyFunSuite {
     val b = boxesB.toDF("b_id", "b_min_lon", "b_min_lat", "b_max_lon", "b_max_lat")
     val df = BboxJoin.overlapJoin(a, b, 3.0, broadcastB = false)
     // past-the-broadcast-wall path: the planner (not a forced hint) picks
-    // the strategy — the optimized plan must carry no ResolvedHint
-    assert(!df.queryExecution.optimizedPlan.toString.contains("hint"),
-      df.queryExecution.optimizedPlan.toString)
+    // the strategy — the optimized plan must carry no broadcast hint, while
+    // the default broadcastB = true plan must carry one
+    val optimized = df.queryExecution.optimizedPlan.toString
+    assert(!optimized.contains("strategy=broadcast"), optimized)
+    val hinted = BboxJoin.overlapJoin(a, b, 3.0).queryExecution.optimizedPlan.toString
+    assert(hinted.contains("strategy=broadcast"), hinted)
     val got = df.collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5))))

@@ -95,17 +95,33 @@ class PipelineSpec extends AnyFunSuite {
     assert(lin.agg(sum("rows")).as[Long].collect()(0) > 0)
   }
 
-  test("reverse shuffle-join path (world-scale polygons) matches broadcast path") {
-    val pts = Synth.pages(spark, 400, 4).toDF()
-      .select($"url".as("query_id"))
-      .withColumn("lon", lit(2.1287) + (xxhash64($"query_id") % 1000) / lit(500000.0))
-      .withColumn("lat", lit(41.40139) + (xxhash64($"query_id") % 997) / lit(500000.0))
-    val viaBroadcast = Reverse.reverse(pts, polys, polyCells, broadcastIndex = true)
-      .select("query_id", "polygon_id", "formatted").orderBy("query_id").collect()
-    val viaShuffle = Reverse.reverse(pts, polys, polyCells, broadcastIndex = false)
-      .select("query_id", "polygon_id", "formatted").orderBy("query_id").collect()
-    assert(viaBroadcast.toSeq === viaShuffle.toSeq)
-    assert(viaBroadcast.exists(_.getAs[String]("formatted") != null))
+  test("reverse formatted: Pipeline.geocode hit equals Reverse.reverse, with and without language") {
+    // road branch with translations (Calatrava 64), name branch with
+    // translations (Barcelona city), name branch without (Moabit), and a
+    // partial translation map that must fall back (Schwabing: de only)
+    val points = Seq((2.12870, 41.40139), (2.20000, 41.35000),
+      (13.34000, 52.53000), (11.58849, 48.17009))
+    val pages = points.zipWithIndex.map { case ((lon, lat), i) =>
+      val text = f"Survey point $lat%.5f, $lon%.5f exactly."
+      graft.model.Page(s"https://example.org/fmt/$i", new java.sql.Timestamp(0L),
+        text.getBytes("UTF-8"), text, "en")
+    }.toDF()
+    val pts = points.zipWithIndex.map { case ((lon, lat), i) => (i.toLong, lon, lat) }
+      .toDF("query_id", "lon", "lat")
+    for (language <- Seq(None, Some("fr"))) {
+      val params = graft.model.ReverseParams(language = language)
+      val viaPipeline = Pipeline.geocode(spark, pages, idx, polys, polyCells, scanner,
+          Pipeline.Config(revParams = params))
+        .filter($"verb" === "reverse")
+        .select(regexp_extract($"url", "([0-9]+)$", 1).cast("long"), $"formatted")
+        .as[(Long, String)].collect().toMap
+      val viaReverse = Reverse.reverse(pts, polys, polyCells, params)
+        .select("query_id", "formatted").as[(Long, String)].collect().toMap
+      assert(viaPipeline === viaReverse, s"language=$language")
+      assert(viaReverse.size === points.size && viaReverse.values.forall(_ != null))
+      assert(viaReverse(0L) === (if (language.isEmpty) "Carrer de Calatrava, 64, 08017 Barcelona, Spain"
+        else "Carrer de Calatrava, 64, 08017 Barcelone, Espagne"))
+    }
   }
 
   test("salted join produces identical results to plain join") {

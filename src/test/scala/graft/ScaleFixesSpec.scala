@@ -109,7 +109,7 @@ class ScaleFixesSpec extends AnyFunSuite {
 
     val (m1, p1) = Pipeline.worldScaleLayout(spark, pages, polys, cells,
       scanner, wh, buckets = 4, cfg)
-    val base = Pipeline.geocodeWorldScaleRead(spark, m1, p1, idx, polys, cells)
+    val base = Pipeline.geocodeWorldScaleRead(spark, m1, p1, idx)
       .select("url", "surface", "verb", "ref_id").collect().map(_.toString).sorted.toSeq
     def packedFiles() = new java.io.File(s"$wh/polycells_bucketed_xsession")
       .listFiles().filter(_.getName.endsWith(".parquet"))
@@ -122,7 +122,7 @@ class ScaleFixesSpec extends AnyFunSuite {
     val (m2, p2) = Pipeline.worldScaleLayout(spark, pages, polys, cells,
       scanner, wh, buckets = 4, cfg)
     assert(packedFiles() === before, "packed table must be re-registered, not rewritten")
-    val again = Pipeline.geocodeWorldScaleRead(spark, m2, p2, idx, polys, cells)
+    val again = Pipeline.geocodeWorldScaleRead(spark, m2, p2, idx)
     val plan = again.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning(cell"), plan.take(3000))
     assert(again.select("url", "surface", "verb", "ref_id")

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{Gazetteer, Pipeline, Reverse}
@@ -76,7 +75,20 @@ class WorldScaleSpec extends AnyFunSuite {
     val polys = Gazetteer.polygonsDF(spark, World.polygons(filler = 60))
     val cells = Gazetteer.polygonCellIndex(polys)
     val scanner = Gazetteer.scanner(gazRows)
-    val pages = Synth.pages(spark, 2000, 8).toDF()
+    // coordinate pages spread over the filler territory: each filler
+    // polygon's centre (the donut hole when i % 3 == 2), a point between
+    // hole and outer ring, one just past the outer ring and one well outside
+    val probes = Seq("centre" -> (0.0, 0.0), "annulus" -> (0.2, 0.0),
+      "edge" -> (0.32, 0.1), "outside" -> (0.6, 0.5))
+    val coordPages = (0 until 60).flatMap { i =>
+      val (lon, lat) = (-160.0 + (i * 37 % 320) + 0.5, -70.0 + (i * 23 % 140) + 0.5)
+      probes.map { case (tag, (dLon, dLat)) =>
+        val text = f"Marker at ${lat + dLat}%.5f, ${lon + dLon}%.5f exactly."
+        graft.model.Page(s"https://example.org/filler/$i/$tag",
+          new java.sql.Timestamp(0L), text.getBytes("UTF-8"), text, "en")
+      }
+    }.toDF()
+    val pages = Synth.pages(spark, 2000, 8).toDF().unionByName(coordPages)
 
     val base = Pipeline.geocode(spark, pages, idx, polys, cells, scanner)
     val world = Pipeline.geocodeWorldScale(spark, pages, idx, polys, cells,
@@ -97,6 +109,18 @@ class WorldScaleSpec extends AnyFunSuite {
     assert(key(world) === key(base))
     assert(world.count() > 0)
 
+    // the filler probes resolved as the ray-caster says: a donut hole and
+    // the outside points find no polygon, every other point its own filler
+    val filler = world.filter($"url".startsWith("https://example.org/filler/"))
+      .select("url", "verb", "ref_id").as[(String, String, Long)].collect()
+      .map { case (url, verb, ref) => url.stripPrefix("https://example.org/filler/") -> (verb, ref) }
+      .toMap
+    val expected = (0 until 60).flatMap { i =>
+      val inside = Seq("annulus") ++ (if (i % 3 == 2) Nil else Seq("centre"))
+      inside.map(tag => s"$i/$tag" -> (("reverse", 6000L + i)))
+    }.toMap
+    assert(filler === expected)
+
     spark.sql("DROP TABLE IF EXISTS graft_mentions_bucketed_run")
     spark.sql("DROP TABLE IF EXISTS graft_polycells_bucketed_run")
   }
@@ -116,30 +140,5 @@ class WorldScaleSpec extends AnyFunSuite {
     assert(a === b)
     assert(a.nonEmpty)
     prep.top1.unpersist(); prep.packed.unpersist()
-  }
-
-  test("reverseBucketed equals broadcast reverse on holed filler polygons") {
-    val wh = Files.createTempDirectory("graft-rb").toString
-    val polys = Gazetteer.polygonsDF(spark, World.polygons(filler = 30))
-    val cells = Gazetteer.polygonCellIndex(polys)
-    // points scattered over filler territory, including donut holes
-    val pts = spark.range(0, 3000).select(col("id").as("query_id"),
-      ((col("id") * 37 % 320) - 160 + (col("id") % 100) / lit(100.0)).as("lon"),
-      ((col("id") * 23 % 140) - 70 + (col("id") % 77) / lit(77.0)).as("lat"))
-    val base = Reverse.reverse(pts, polys, cells, ReverseParams())
-      .select("query_id", "polygon_id", "geocode_status")
-    Reverse.writePackedBucketed(spark, polys, cells,
-      "graft_rb_packed", s"$wh/packed", 8)
-    spark.sql("DROP TABLE IF EXISTS graft_rb_points")
-    pts.withColumn("cell", graft.functions.GeoFunctions.cellId(col("lon"), col("lat"),
-        lit(graft.geo.CellIndex.FineLevel)))
-      .write.bucketBy(8, "cell").sortBy("cell")
-      .option("path", s"$wh/points").mode("overwrite").saveAsTable("graft_rb_points")
-    val bucketed = Reverse.reverseBucketed(spark, "graft_rb_points", "graft_rb_packed")
-      .select("query_id", "polygon_id", "geocode_status")
-    assert(bucketed.collect().map(_.toString).sorted.toSeq ===
-      base.collect().map(_.toString).sorted.toSeq)
-    spark.sql("DROP TABLE IF EXISTS graft_rb_points")
-    spark.sql("DROP TABLE IF EXISTS graft_rb_packed")
   }
 }
